@@ -2,8 +2,12 @@
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric": ..., "value": <total sec>, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+line: {"metric": ..., "value": <total sec>, "unit": "sec", "sf": ...,
+"pipeline_events*": ..., "detail": <path>}. The per-query timings and the
+other workloads' figures go to the side JSON file at ``detail``
+($SPARK_GRAFT_BENCH_DETAIL, default bench_detail.json next to this
+script), so the stdout line stays a few hundred characters however many
+queries the suite has.
 
 The throughput headline is the end-to-end parse → enrich → route →
 aggregate pipeline (BASELINE.json metric, turns/sec) over two inputs:
@@ -172,13 +176,22 @@ def main() -> None:
         timings[name] = round(min(runs), 3)
 
     total = round(sum(timings.values()), 3)
-    print(json.dumps({
+    headline = {
         "metric": "e2e parse→enrich→route→aggregate + operator suite wall time",
         "value": total,
         "unit": "sec",
-        "queries": timings,
         "sf": sf_dir,
-        **extra,
+    }
+    detail = os.environ.get("SPARK_GRAFT_BENCH_DETAIL") or os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "bench_detail.json"
+    )
+    with open(detail, "w") as f:
+        json.dump({**headline, "queries": timings, **extra}, f, indent=1)
+    print(json.dumps({
+        **headline,
+        "pipeline_events": timings["pipeline_events"],
+        **{k: v for k, v in extra.items() if k.startswith("pipeline_events")},
+        "detail": detail,
     }))
     spark.stop()
 

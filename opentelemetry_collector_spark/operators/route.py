@@ -8,12 +8,15 @@ Reference semantics to preserve:
 * content-based routing: a router picks a subset of downstream
   pipelines per record (connector/logs_router.go:18-69);
 * clone-per-mutating-branch is subsumed by DataFrame immutability —
-  we just cache the routed parent once and run one write action per
-  sink (SURVEY §1.3).
+  the routed parent is cached once and no consumer re-reads the input
+  (SURVEY §1.3).
 
-Scale shape: ``route`` is a pure column expression, so Catalyst pushes
-each sink's ``route = X`` filter into the cached scan; with the parent
-persisted there is exactly ONE pass over the data for all sinks. For
+Scale shape: ``route`` is a pure column expression. The flagship job
+(plans/pipeline.run_pipeline) fans out with ONE partitioned write keyed
+on it — one pass over the cached parent for every sink, unparseable
+rows included as the ``quarantine`` route value. :func:`fan_out` is the
+general form for sinks that are arbitrary callables: one action per
+sink, each a ``route = X`` filter pushed into the cached scan. For
 multi-route (a row matching several sinks) use :func:`explode_routes`.
 """
 
@@ -27,6 +30,7 @@ from pyspark.sql import functions as F
 from opentelemetry_collector_spark.sqltext import SINK_NAMES
 
 TOOL_SINKS = ["search", "browser", "python", "editor"]
+QUARANTINE_ROUTE = "quarantine"
 
 
 def route_expr() -> Column:
@@ -38,6 +42,13 @@ def route_expr() -> Column:
         )
         .otherwise(F.lit("sink_default"))
     )
+
+
+def route_or_quarantine_expr() -> Column:
+    """:func:`route_expr` for parseable rows; rows that failed to parse
+    (``parse_ok = false``) take the :data:`QUARANTINE_ROUTE` value, so the
+    permanent-error rows travel the same fan-out as every sink."""
+    return F.when(F.col("parse_ok"), route_expr()).otherwise(F.lit(QUARANTINE_ROUTE))
 
 
 def route_stage(df: DataFrame, expr: Column | None = None) -> DataFrame:

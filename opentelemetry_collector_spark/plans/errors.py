@@ -62,26 +62,31 @@ def default_sink_constraints(max_text_bytes: int = MAX_SINK_TEXT_BYTES) -> list[
     ]
 
 
-def write_with_partial_success(
+def write_routed_with_partial_success(
     catalog,
-    table: str,
     df: DataFrame,
+    key: Column,
+    tables: dict[str, str],
     constraints: list[tuple[str, Column]] | None = None,
     max_records_per_file: int = 0,
-) -> tuple[int, int]:
-    """Sink write with per-write rejected-row accounting (OTLP partial
-    success: the push succeeds while reporting rejected_log_records,
-    exporter/otlpexporter/otlp.go:143-149 + internal/queue_sender
-    partial-success logging).
+) -> dict[str, tuple[int, int]]:
+    """Fan-out sink write with per-table rejected-row accounting (OTLP
+    partial success: the push succeeds while reporting
+    rejected_log_records, exporter/otlpexporter/otlp.go:143-149 +
+    internal/queue_sender partial-success logging).
 
-    Scale shape: the accepted/rejected counts ride the ONE sink write
-    via an Observation placed above the validity filter (CollectMetrics
-    is a pushdown barrier, so it sees every input row). The rejected
-    side is written to ``rejected_<table>`` ONLY when the count is
-    non-zero — the clean-data fast path stays a single action with two
-    codegen'd predicates, no second pass.
+    Each row goes to ``tables[<value of key>]``; rows whose key is not in
+    ``tables`` are dropped. All tables come from ONE partitioned write
+    (TableCatalog.overwrite_partitioned); ``key`` is partitioned on as a
+    copy, so the files keep every column of ``df``. Per-table totals and
+    rejected counts ride that write via one Observation of ``count_if``
+    pairs placed above the validity filter (CollectMetrics is a pushdown
+    barrier, so it sees every input row). Rejected rows go to
+    ``rejected_<table>`` — one more partitioned write, run ONLY when some
+    count is non-zero, for the tables whose count is non-zero — so the
+    clean-data fast path stays a single action.
 
-    Returns (accepted_rows, rejected_rows).
+    Returns {key value: (accepted_rows, rejected_rows)}.
     """
     from pyspark.sql import Observation
 
@@ -89,26 +94,49 @@ def write_with_partial_success(
     reason = F.lit(None).cast("string")
     for name, ok in reversed(constraints):
         reason = F.when(~F.coalesce(ok, F.lit(False)), F.lit(name)).otherwise(reason)
-    flagged = df.withColumn("_reject_reason", reason)
-    obs = Observation(f"partial_{table}")
+    keys = list(tables)
+    flagged = (
+        df.withColumn("_reject_reason", reason)
+        .withColumn("_table", key)
+        .filter(F.col("_table").isin(keys))
+    )
+    rejected = F.col("_reject_reason").isNotNull()
+    obs = Observation("partial_success")
     observed = flagged.observe(
         obs,
-        F.count(F.lit(1)).alias("n_total"),
-        F.count(F.col("_reject_reason")).alias("n_rejected"),
+        *[F.count_if(F.col("_table") == k).alias(f"n{i}") for i, k in enumerate(keys)],
+        *[F.count_if((F.col("_table") == k) & rejected).alias(f"r{i}")
+          for i, k in enumerate(keys)],
     )
-    catalog.overwrite(
-        table,
-        observed.filter(F.col("_reject_reason").isNull()).drop("_reject_reason"),
+    catalog.overwrite_partitioned(
+        tables, observed.filter(~rejected).drop("_reject_reason"), "_table",
         max_records_per_file=max_records_per_file,
     )
-    n_total, n_rejected = obs.get["n_total"], obs.get["n_rejected"]
-    if n_rejected:
-        catalog.overwrite(
-            f"rejected_{table}",
-            flagged.filter(F.col("_reject_reason").isNotNull())
-            .withColumnRenamed("_reject_reason", "reject_reason"),
+    got = obs.get
+    counts = {k: (got[f"n{i}"] - got[f"r{i}"], got[f"r{i}"]) for i, k in enumerate(keys)}
+    with_rejects = {k: f"rejected_{tables[k]}" for k, (_, r) in counts.items() if r}
+    if with_rejects:
+        catalog.overwrite_partitioned(
+            with_rejects,
+            flagged.filter(rejected).withColumnRenamed("_reject_reason", "reject_reason"),
+            "_table",
         )
-    return n_total - n_rejected, n_rejected
+    return counts
+
+
+def write_with_partial_success(
+    catalog,
+    table: str,
+    df: DataFrame,
+    constraints: list[tuple[str, Column]] | None = None,
+    max_records_per_file: int = 0,
+) -> tuple[int, int]:
+    """One-table form of :func:`write_routed_with_partial_success`:
+    ``df`` goes to ``table``, invalid rows to ``rejected_<table>`` when
+    there are any. Returns (accepted_rows, rejected_rows)."""
+    return write_routed_with_partial_success(
+        catalog, df, F.lit("t"), {"t": table}, constraints, max_records_per_file,
+    )["t"]
 
 
 def with_retry(

@@ -15,12 +15,13 @@ sink; stage names unique; sink dedup (two routes to one table union
 rather than double-write — graph.go:213-248).
 
 :func:`run_pipeline` is the flagship end-to-end job:
-scan → parse → enrich → filter → route → fan-out sinks → per-sink
-aggregates, each stage checkpoint-gated and metered.
+scan → parse → enrich → route → fan-out sinks → per-sink aggregates,
+every sink acked and metered on its own.
 """
 
 from __future__ import annotations
 
+import shutil
 import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -30,7 +31,6 @@ from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.operators import aggregate as agg_ops
 from opentelemetry_collector_spark.operators import enrich as enrich_ops
-from opentelemetry_collector_spark.operators import filters as filter_ops
 from opentelemetry_collector_spark.operators import parse as parse_ops
 from opentelemetry_collector_spark.operators import route as route_ops
 from opentelemetry_collector_spark.plans import errors as err_ops
@@ -93,8 +93,6 @@ def default_stages(spark: SparkSession) -> list[tuple[str, Stage]]:
     return [
         ("parse", lambda df: parse_ops.parse_stage(df)),
         ("enrich", lambda df: enrich_ops.enrich_stage(df, tool_lk, role_lk)),
-        # filter: quarantine unparseable rows; keep everything parseable
-        # (strict-set example configs live in tests).
         ("route", lambda df: route_ops.route_stage(df)),
     ]
 
@@ -110,6 +108,14 @@ def run_pipeline(
     sink_chunks: int = 1,
 ) -> RunResult:
     """The flagship job, checkpoint-gated per stage.
+
+    Single-pass fan-out: one producer, N consumers, no re-read of the
+    input (internal/fanoutconsumer/logs.go:21-77). Over the one cached
+    routed parent (unparseable rows ride it as the ``quarantine`` route),
+    one lineage aggregation counts every route, one partitioned write
+    publishes every pending sink and one every pending ``agg_<sink>``.
+    Each table keeps its own ack, so a resume rewrites only un-acked
+    tables; acks sharing a write each record an equal share of its time.
 
     ``fail_after_stage`` injects a crash for the kill/resume property
     test (receiver/receivertest/contract_checker.go:75-120 scenario:
@@ -131,31 +137,34 @@ def run_pipeline(
     catalog = TableCatalog(spark, warehouse)
     ckpt = CheckpointStore(warehouse, run_id)
     skipped: list[str] = []
+    write_stages = [f"write_{s}" for s in SINK_NAMES]
 
-    def _gate(stage: str, fn: Callable[[], tuple[int, int, dict]]) -> None:
-        """Run a terminal (sink-writing) stage unless already acked."""
-        if ckpt.is_done(stage):
-            skipped.append(stage)
+    def _gate(stages: list[str], fn: Callable[[list[str]], dict]) -> None:
+        """Run ``fn(pending)`` once for the un-acked ``stages``, then ack
+        each from its {stage: (rows_in, rows_out, extra)} result."""
+        pending = [st for st in stages if not ckpt.is_done(st)]
+        skipped.extend(st for st in stages if st not in pending)
+        if not pending:
             return
         t0 = time.monotonic()
-        rows_in, rows_out, extra = fn()
-        ckpt.commit(
-            stage,
-            StageMetric(
-                run_id=ckpt.run_id, stage=stage, rows_in=rows_in,
-                rows_out=rows_out, wall_ms=int((time.monotonic() - t0) * 1000),
-                extra=extra,
-            ),
-        )
-        if fail_after_stage == stage:
-            raise RuntimeError(f"injected failure after stage {stage}")
+        results = fn(pending)
+        wall_ms = int((time.monotonic() - t0) * 1000 / len(pending))
+        for st in pending:
+            rows_in, rows_out, extra = results[st]
+            ckpt.commit(st, StageMetric(
+                run_id=ckpt.run_id, stage=st, rows_in=rows_in,
+                rows_out=rows_out, wall_ms=wall_ms, extra=extra,
+            ))
+            if fail_after_stage == st:
+                raise RuntimeError(f"injected failure after stage {st}")
 
     src = source or (lambda s: derive_transcripts(s, sf_dir))
-    transcripts = src(spark)
-    parsed = parse_ops.parse_stage(transcripts)
-    good, bad = parse_ops.quarantine_split(parsed)
-    enriched = enrich_ops.enrich_stage(good, tool_lookup_df(spark), role_lookup_df(spark))
-    routed = route_ops.route_stage(enriched).persist()
+    parsed = parse_ops.parse_stage(src(spark))
+    # enrich is a left join, so unparseable rows survive it and ride the
+    # cached parent under the quarantine route
+    enriched = enrich_ops.enrich_stage(parsed, tool_lookup_df(spark), role_lookup_df(spark))
+    routed = route_ops.route_stage(enriched, route_ops.route_or_quarantine_expr()).persist()
+    route = F.col("route")
 
     def _chunked_write(table: str, df: DataFrame, stage: str) -> tuple[int, dict]:
         """Write ``df`` as sink_chunks acked chunks; returns (rows, files).
@@ -170,8 +179,6 @@ def run_pipeline(
         chunk's rows were hashed with the old modulus; mixing moduli
         silently duplicates and drops rows). The final lineage scan
         covers only the part dirs this run owns."""
-        import shutil
-
         acked_chunks = [
             m for m in ckpt.metrics()
             if m["stage"].startswith(f"{stage}.chunk")
@@ -226,95 +233,85 @@ def run_pipeline(
         return total, files
 
     try:
-        # Per-partition logical lineage for ALL sinks in ONE aggregation
-        # over the cached routed parent (A6 north-rule contract; skipped
-        # entirely when every write stage is already acked on resume).
-        write_stages = [f"write_{s}" for s in SINK_NAMES] + ["quarantine"]
+        # Per-partition logical lineage for ALL routes, quarantine too, in
+        # ONE aggregation over the cached routed parent (A6 north-rule
+        # contract; skipped when every write stage is acked on resume).
         lin_by_route: dict[str, list[dict]] = {}
-        if any(not ckpt.is_done(st) for st in write_stages):
+        if any(not ckpt.is_done(st) for st in ["quarantine", *write_stages]):
             for r in lineage_ops.logical_lineage(routed).collect():
                 lin_by_route.setdefault(r["route"], []).append(
                     {"part_id": r["part_id"], "rows": r["rows"], "bytes": r["bytes"]}
                 )
 
-        # quarantine sink (permanent-error rows; F7). Write first; the
-        # per-partition aggregation over `bad` (a full re-parse — bad
-        # rows aren't in the cached routed parent) runs ONLY when the
-        # quarantine is non-empty, so the clean path pays nothing.
-        def _quarantine() -> tuple[int, int, dict]:
-            n = _write_counted(catalog, "quarantine", bad.drop("attrs"),
-                               max_records_per_file=send_batch_max_size)
-            qlin = [] if n == 0 else [
-                {"part_id": r["part_id"], "rows": r["rows"], "bytes": r["bytes"]}
-                for r in lineage_ops.logical_lineage(bad, keys=[]).collect()
-            ]
-            return n, n, {
-                "partitions": qlin,
-                "files": lineage_ops.file_lineage(catalog.path("quarantine")),
-            }
+        def _quarantine(_pending: list[str]) -> dict:
+            # permanent-error rows (F7), read from the cache; the count is
+            # the lineage's, and a clean run writes the schema only
+            parts = lin_by_route.get(route_ops.QUARANTINE_ROUTE, [])
+            n = sum(p["rows"] for p in parts)
+            bad = routed.filter(route == route_ops.QUARANTINE_ROUTE).select(
+                *[c for c in parsed.columns if c != "attrs"])
+            if n:
+                catalog.overwrite("quarantine", bad, max_records_per_file=send_batch_max_size)
+            else:
+                catalog.overwrite_empty("quarantine", bad.schema)
+            files = lineage_ops.file_lineage(catalog.path("quarantine"))
+            return {"quarantine": (n, n, {"partitions": parts, "files": files})}
 
-        _gate("quarantine", _quarantine)
-
-        # per-sink routed writes + accounting (R1 fan-out over one cached parent)
-        for sink in SINK_NAMES:
-            branch = routed.filter(F.col("route") == sink)
-
-            def _write(b=branch, s=sink) -> tuple[int, int, dict]:
-                rejected = 0
-                if sink_chunks > 1:
-                    n, files = _chunked_write(s, b.drop("attrs"), f"write_{s}")
-                else:
-                    # partial success: invalid rows land in rejected_<sink>
-                    # while the sink commit succeeds (errors.py F7)
-                    n, rejected = err_ops.write_with_partial_success(
-                        catalog, s, b.drop("attrs"),
-                        max_records_per_file=send_batch_max_size,
-                    )
-                    files = lineage_ops.file_lineage(catalog.path(s))
-                return n + rejected, n, {
-                    "sink": s,
-                    "rejected": rejected,
-                    "partitions": lin_by_route.get(s, []),
-                    "files": files,
-                }
-
-            _gate(f"write_{sink}", _write)
-
-            def _agg(b=branch, s=sink) -> tuple[int, int, dict]:
-                n = _write_counted(
-                    catalog, f"agg_{s}",
-                    agg_ops.hourly_sink_accounting(b, with_route=False),
+        def _write(pending: list[str]) -> dict:
+            sinks = [st.removeprefix("write_") for st in pending]
+            branch = routed.filter(route.isin(sinks)).drop("attrs")
+            if sink_chunks > 1:
+                chunked = {s: _chunked_write(s, branch.filter(route == s), f"write_{s}")
+                           for s in sinks}
+                counts = {s: (n, 0) for s, (n, _) in chunked.items()}
+                files = {s: f for s, (_, f) in chunked.items()}
+            else:
+                # partial success: invalid rows land in rejected_<sink>
+                # while the sink commit succeeds (errors.py F7)
+                counts = err_ops.write_routed_with_partial_success(
+                    catalog, branch, route, {s: s for s in sinks},
                     max_records_per_file=send_batch_max_size,
                 )
-                return n, n, {
-                    "sink": s,
-                    "files": lineage_ops.file_lineage(catalog.path(f"agg_{s}")),
-                }
+                files = {s: lineage_ops.file_lineage(catalog.path(s)) for s in sinks}
+            return {f"write_{s}": (n + rej, n, {
+                "sink": s, "rejected": rej,
+                "partitions": lin_by_route.get(s, []), "files": files[s],
+            }) for s, (n, rej) in counts.items()}
 
-            _gate(f"agg_{sink}", _agg)
+        def _agg(pending: list[str]) -> dict:
+            sinks = [st.removeprefix("agg_") for st in pending]
+            # route is the partition column, so it drops out of the files
+            # and each agg_<sink> keeps the with_route=False schema
+            catalog.overwrite_partitioned(
+                {s: f"agg_{s}" for s in sinks},
+                agg_ops.hourly_sink_accounting(routed.filter(route.isin(sinks))),
+                "route", max_records_per_file=send_batch_max_size,
+            )
+            files = {s: lineage_ops.file_lineage(catalog.path(f"agg_{s}")) for s in sinks}
+            rows = {s: sum(f["rows"] for f in files[s]) for s in sinks}
+            return {f"agg_{s}": (rows[s], rows[s], {"sink": s, "files": files[s]})
+                    for s in sinks}
 
-        # flatten acked lineage into queryable warehouse tables
-        _gate("lineage", lambda: (
-            lambda counts: (counts[0], counts[0], {"file_rows": counts[1]})
-        )(ckpt.write_lineage_table(spark, catalog)))
+        def _lineage(_pending: list[str]) -> dict:
+            # flatten acked lineage into queryable warehouse tables
+            rows, file_rows = ckpt.write_lineage_table(spark, catalog)
+            return {"lineage": (rows, rows, {"file_rows": file_rows})}
+
+        _gate(["quarantine"], _quarantine)
+        _gate(write_stages, _write)
+        _gate([f"agg_{s}" for s in SINK_NAMES], _agg)
+        _gate(["lineage"], _lineage)
     finally:
         routed.unpersist()
 
-    sink_counts = {
-        s: m["rows_out"]
-        for m in ckpt.metrics()
-        for s in [m.get("sink")]
-        if s and m["stage"].startswith("write_")
-    }
-    quarantined = next(
-        (m["rows_out"] for m in ckpt.metrics() if m["stage"] == "quarantine"), 0
-    )
+    acks = ckpt.metrics()
     return RunResult(
         run_id=ckpt.run_id,
-        sink_counts=sink_counts,
-        quarantined=quarantined,
+        sink_counts={m["sink"]: m["rows_out"] for m in acks
+                     if "sink" in m and m["stage"].startswith("write_")},
+        quarantined=next((m["rows_out"] for m in acks if m["stage"] == "quarantine"), 0),
         stages_skipped=skipped,
-        metrics=ckpt.metrics(),
+        metrics=acks,
     )
 
 
@@ -322,10 +319,9 @@ def _write_counted(
     catalog: TableCatalog, table: str, df: DataFrame,
     max_records_per_file: int = 0,
 ) -> int:
-    """Write + count in ONE action via the Observation API — the
-    obsconsumer item counter riding the data path instead of a second
-    scan (service/internal/obsconsumer/logs.go:53-70). The file-size
-    bound (send_batch_max_size analog) rides the same write."""
+    """One chunk's write + count in ONE action (the ``sink_chunks`` > 1
+    path) via the Observation API — the obsconsumer item counter riding
+    the data path, not a second scan (obsconsumer/logs.go:53-70)."""
     from pyspark.sql import Observation
 
     obs = Observation(f"rows_{table}")

@@ -19,9 +19,12 @@ downstream readers get uniform splits.
 from __future__ import annotations
 
 import os
+import re
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class TableCatalog:
@@ -85,29 +88,80 @@ class TableCatalog:
         path would silently lose the no-shuffle join property."""
         return self.spark.table(table.replace("/", "_").replace("-", "_"))
 
+    def overwrite_partitioned(
+        self, tables: dict[str, str], df: DataFrame, by: str,
+        max_records_per_file: int = 0,
+    ) -> None:
+        """Fan-out write: ONE partitioned Spark write of ``df``, published
+        as one table per value of column ``by`` (``tables`` maps value →
+        table) — N tables from one pass instead of N filtered writes.
+
+        The write lands in a staging directory inside the warehouse; each
+        ``by=<value>/`` directory is then renamed into place, replacing
+        its table (no data is copied). ``by`` is a Hive partition column,
+        so it is not stored in the files: each table has the schema of
+        ``df.drop(by)``. A value with no rows gets no directory from the
+        write, so its table is written empty with that schema. Rows whose
+        value is not in ``tables`` are discarded with the staging
+        directory. Tables not named in ``tables`` are never touched."""
+        for value in tables:
+            # the publish looks the value up as a directory name, so it
+            # must be one that Spark writes without escaping
+            if not re.fullmatch(r"[A-Za-z0-9_.-]+", value):
+                raise ValueError(f"partition value {value!r} is not path-safe")
+        staging = f"_staging_{uuid.uuid4().hex}"
+        try:
+            self.overwrite(staging, df, max_records_per_file, partition_by=[by])
+            for value, table in tables.items():
+                part = os.path.join(self.path(staging), f"{by}={value}")
+                if os.path.isdir(part):
+                    self._publish(part, table)
+                else:
+                    self.overwrite_empty(table, df.drop(by).schema)
+        finally:
+            shutil.rmtree(self.path(staging), ignore_errors=True)
+
+    def overwrite_empty(self, table: str, schema: StructType) -> None:
+        """Zero-row table with ``schema``, written locally with pyarrow —
+        what an empty Spark write leaves, without paying a job for it."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        self._write_arrow(table, to_arrow_schema(schema).empty_table())
+
     def overwrite_local(
         self, table: str, rows: list[tuple], schema: list[tuple[str, str]]
     ) -> None:
         """Driver-side metadata table write (pyarrow, no Spark job) —
         for tiny O(stages) tables like lineage/file_stats, the way
-        Iceberg writes manifest metadata alongside data files. Atomic
-        via write-then-rename of the whole directory."""
+        Iceberg writes manifest metadata alongside data files."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         arrays = {
             name: pa.array([r[i] for r in rows], type=getattr(pa, typ)())
             for i, (name, typ) in enumerate(schema)
         }
-        target = self.path(table)
-        tmp = target + "._tmp"
+        self._write_arrow(table, pa.table(arrays))
+
+    def _write_arrow(self, table: str, data) -> None:
+        """Write a pyarrow table as the whole of ``table``: write-then-
+        rename of the directory."""
+        import pyarrow.parquet as pq
+
+        tmp = self.path(table) + "._tmp"
         shutil.rmtree(tmp, ignore_errors=True)
         os.makedirs(tmp, exist_ok=True)
-        pq.write_table(pa.table(arrays), os.path.join(tmp, "part-00000.parquet"))
-        with open(os.path.join(tmp, "_SUCCESS"), "w"):
+        pq.write_table(data, os.path.join(tmp, "part-00000.parquet"))
+        self._publish(tmp, table)
+
+    def _publish(self, src: str, table: str) -> None:
+        """Make directory ``src`` the table: mark it committed, then
+        replace the table's directory with it."""
+        with open(os.path.join(src, "_SUCCESS"), "w"):
             pass
+        target = self.path(table)
         shutil.rmtree(target, ignore_errors=True)
-        os.replace(tmp, target)
+        os.makedirs(os.path.dirname(target), exist_ok=True)
+        os.replace(src, target)
 
     def read(self, table: str) -> DataFrame:
         return self.spark.read.parquet(self.path(table))

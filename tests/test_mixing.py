@@ -86,3 +86,46 @@ def test_resample_to_mix_copy_counts(spark):
         df, {"en": 1.0}, strat_col="lang", key_col="doc_id"
     )
     assert none.filter(F.col("lang") == "zh").count() == 0
+
+
+def test_sql_twins_escape_quotes_in_stratum_names(spark):
+    """A stratum name with a quote must reach the DuckDB twins as a
+    string literal (quote doubled), so both engines agree on it."""
+    import duckdb
+    import pandas as pd
+
+    rows = [(i, "o'brien" if i % 2 else "en", 100 + i) for i in range(200)]
+    df = spark.createDataFrame(rows, "doc_id bigint, lang string, n_chars bigint")
+    con = duckdb.connect()
+    con.register("docs", pd.DataFrame(rows, columns=["doc_id", "lang", "n_chars"]))
+
+    def both(out, sql, cols):
+        rel = con.sql(sql)
+        idx = [rel.columns.index(c) for c in cols]
+        duck = sorted(tuple(r[i] for i in idx) for r in rel.fetchall())
+        return sorted(tuple(r[c] for c in cols) for r in out.collect()), duck
+
+    rates = {"en": 0.5, "o'brien": 0.25}
+    got, want = both(
+        mixing.stratified_sample(df, rates, strat_col="lang", key_col="doc_id"),
+        mixing.stratified_sample_sql("docs", rates),
+        ["doc_id", "lang"],
+    )
+    assert got == want and any(lang == "o'brien" for _, lang in got)
+
+    targets = {"en": 0.25, "o'brien": 0.75}
+    cols = ["lang", "doc_count", "size_sum", "target_share"]
+    got, want = both(
+        mixing.mixture_weights(df, targets, strat_col="lang", size_col="n_chars"),
+        mixing.mixture_weights_sql("docs", targets),
+        cols,
+    )
+    assert got == want and ("o'brien", 100, 20000, 0.75) in got
+
+    weights = {"en": 0.5, "o'brien": 1.5}
+    got, want = both(
+        mixing.resample_to_mix(df, weights, strat_col="lang", key_col="doc_id"),
+        mixing.resample_to_mix_sql("docs", weights),
+        ["doc_id", "copy"],
+    )
+    assert got == want and any(c == 2 for _, c in got)
